@@ -26,7 +26,7 @@ pushdown intact.
 
 Beyond the base fold, this module covers the protocol's row-level and
 metadata-level features: DELETION VECTORS (merge-on-read row deletes —
-roaring.py codecs, stored + inline descriptors, executor-side decode,
+roaring.py codecs, stored + inline descriptors, driver-side decode,
 checkpoint carry-through), COLUMN MAPPING mode=name (physical col-uuid
 names in data files; renames are metadata-only commits), VACUUM
 (retention-gated physical deletion of tombstoned files), and CHANGE DATA
@@ -715,7 +715,9 @@ class DeltaTableWriter:
         mapping, and non-int partition columns all fall back to the
         per-version ``commit`` path with identical semantics (those
         features need the per-add driver passes)."""
-        pcols = list(getattr(self, "_partition_cols", []) or [])
+        # a fresh table's commits here carry no partitioning: commit_many
+        # takes no partition_cols, and commit 0 is what would set them
+        pcols: list[str] = []
         if self._version >= 0:
             state = read_delta_log(self.table_dir)
             pcols = list(state.get("partition_cols") or [])
@@ -726,15 +728,10 @@ class DeltaTableWriter:
             and not getattr(self, "_generated", {})
             and not (self._meta and self._check_constraints())
         )
-        if simple and pcols and self._version >= 0:
+        if simple and pcols:
             schema = json.loads(state["schema_json"])
             types = {f["name"]: f["type"] for f in schema["fields"]}
             simple = all(types.get(c) in ("integer", "long") for c in pcols)
-        elif simple and pcols:
-            # fresh table: partition column types unknown until commit 0
-            # runs; int-only check happens against the first frame
-            t0 = dict(adds_per_version[0].dtypes)
-            simple = all(t0.get(c) in ("int", "bigint") for c in pcols)
         if not simple:
             return [
                 self.commit(add_dfs=[d], operation=operation)
@@ -2965,10 +2962,14 @@ def _dv_payload(table_dir: str, dv: dict) -> bytes:
         # encode pads to Z85's 4-byte granularity; truncate to the true size
         return roaring.z85_decode(dv["pathOrInlineDv"])[: int(dv["sizeInBytes"])]
     if dv["storageType"] in ("u", "p"):
+        # read only the version byte and this vector's frame: one sidecar
+        # holds the vectors of many files, and each has its own descriptor
+        offset, size = int(dv["offset"]), int(dv["sizeInBytes"])
         with open(_dv_abs_path(table_dir, dv), "rb") as f:
-            return roaring.read_dv_payload(
-                f.read(), int(dv["offset"]), int(dv["sizeInBytes"])
-            )
+            version = f.read(1)
+            f.seek(offset)
+            frame = f.read(8 + size)
+        return roaring.read_dv_payload(version + frame, 1, size)
     raise ValueError(f"unknown DV storageType {dv['storageType']!r}")
 
 
@@ -2981,29 +2982,30 @@ def _dv_positions(table_dir: str, dv: dict) -> list[int]:
 def _apply_deletion_vectors(
     spark: SparkSession, df: DataFrame, table_dir: str, dv_adds: dict[str, dict]
 ) -> DataFrame:
-    """Drop DV-marked row ordinals from a scan: one (file, bitmap
-    payload) row per DV-bearing file — O(files) rows, payload bytes
-    bounded by the descriptor's sizeInBytes — decoded to row indexes on
-    the EXECUTORS (Arrow-batched pandas UDF over the binary column),
-    exploded, and anti-joined against the data side's hidden
-    `_metadata.file_path`/`row_index` — the same deleted-row-
-    proportional equi-join the Iceberg position-delete path runs
-    (iceberg_format.py scan_iceberg_table)."""
+    """Drop DV-marked row ordinals from a scan. The driver already holds
+    every payload (descriptor-sized reads, see _dv_payload), so it decodes
+    them there with the vectorized roaring reader and ships one
+    (file, positions) row per DV-bearing file as a JVM local relation;
+    built-in ``explode`` turns that into (file, ordinal) rows, anti-joined
+    against the data side's hidden ``_metadata.file_path``/``row_index``
+    — the same deleted-row-proportional equi-join the Iceberg
+    position-delete path runs (iceberg_format.py scan_iceberg_table).
+    No Python worker runs: a Python task costs about 0.2 s of CPU however
+    few rows it holds, and the broadcast side of the join collects every
+    position on the driver regardless of where it was decoded."""
     from . import roaring
 
     rows = [
         (
             os.path.abspath(os.path.join(table_dir, rel)),
-            bytearray(_dv_payload(table_dir, a["deletionVector"])),
+            roaring.bitmap_array_positions(
+                _dv_payload(table_dir, a["deletionVector"])
+            ),
         )
         for rel, a in dv_adds.items()
     ]
-    decode = F.pandas_udf(
-        lambda s: s.map(lambda b: roaring.deserialize_bitmap_array(bytes(b))),
-        "array<long>",
-    )
-    dels = local_df(spark, rows, "_dfile string, _dv binary").select(
-        "_dfile", F.explode(decode("_dv")).alias("_dpos")
+    dels = local_df(spark, rows, "_dfile string, _dpos array<long>").select(
+        "_dfile", F.explode("_dpos").alias("_dpos")
     )
     cols = df.columns
     return (

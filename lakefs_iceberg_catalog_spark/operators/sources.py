@@ -3235,9 +3235,10 @@ def source_delta_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame
     specs' own test vectors.
 
     Scale: DV descriptors are log metadata (O(files) rows, payloads
-    bounded by sizeInBytes); bitmaps decode on the EXECUTORS (Arrow-
-    batched pandas UDF over the binary payload column) and apply as the
-    same deleted-row-proportional (file, row ordinal) anti-join the
+    bounded by sizeInBytes); bitmaps decode on the driver, which has
+    already read their bytes, and reach the join's broadcast side as a
+    JVM local relation, so the scan runs no Python worker. They apply as
+    the same deleted-row-proportional (file, row ordinal) anti-join the
     Iceberg MoR path runs — data files still stream through the
     distributed parquet source with pushdown intact."""
     from ..catalog.delta_format import (

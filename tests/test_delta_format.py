@@ -304,6 +304,119 @@ def test_dv_on_partitioned_table(spark, tmp_path):
     assert scan_delta_table(spark, d).count() == 25 - 2
 
 
+def test_dv_sidecar_reads_only_each_vectors_frame(tmp_path, monkeypatch):
+    """Descriptors sharing one sidecar read the version byte and their
+    own framed slice, never the whole file; size and CRC-32 checks still
+    apply to the slice, so a corrupted vector raises while its
+    neighbours keep reading."""
+    from lakefs_iceberg_catalog_spark.catalog import delta_format, roaring
+
+    payloads = [
+        roaring.serialize_bitmap_array([0, 7, 24]),
+        roaring.serialize_bitmap_array(list(range(0, 60000, 3))),  # ~8 KiB
+        roaring.serialize_bitmap_array([5, (1 << 32) + 1]),
+    ]
+    file_bytes, offsets = roaring.frame_dv_file(payloads)
+    side = tmp_path / "deletion_vector_shared.bin"
+    side.write_bytes(file_bytes)
+    dvs = [
+        {"storageType": "p", "pathOrInlineDv": str(side),
+         "offset": off, "sizeInBytes": len(p)}
+        for off, p in zip(offsets, payloads)
+    ]
+    read_sizes = []
+
+    class _Counting:
+        def __init__(self, f):
+            self._f = f
+
+        def __getattr__(self, name):
+            return getattr(self._f, name)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._f.close()
+
+        def read(self, n=-1):
+            b = self._f.read(n)
+            read_sizes[-1] += len(b)
+            return b
+
+    def counting_open(path, mode="r", *a, **kw):
+        read_sizes.append(0)
+        return _Counting(open(path, mode, *a, **kw))
+
+    monkeypatch.setattr(delta_format, "open", counting_open, raising=False)
+    for dv, p in zip(dvs, payloads):
+        assert delta_format._dv_payload(str(tmp_path), dv) == p
+    assert read_sizes == [1 + 8 + len(p) for p in payloads]
+
+    corrupt = bytearray(file_bytes)
+    corrupt[offsets[1] + 4 + 100] ^= 0xFF  # a byte inside vector 1's data
+    side.write_bytes(bytes(corrupt))
+    with pytest.raises(ValueError, match="CRC-32"):
+        delta_format._dv_payload(str(tmp_path), dvs[1])
+    assert delta_format._dv_payload(str(tmp_path), dvs[0]) == payloads[0]
+    assert delta_format._dv_payload(str(tmp_path), dvs[2]) == payloads[2]
+    with pytest.raises(ValueError, match="size mismatch"):
+        delta_format._dv_payload(
+            str(tmp_path), {**dvs[2], "sizeInBytes": len(payloads[2]) - 1}
+        )
+
+
+_PYTHON_EVAL_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+
+
+def _assert_dv_plan_is_jvm_only(df) -> None:
+    """Run ``df`` and pin its executed plan: the (file, ordinal) left-anti
+    join masks DV rows, and no node hands rows to a Python worker."""
+    df.collect()
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" in p
+    assert "_dfile" in p and "_dpos" in p
+    for node in _PYTHON_EVAL_NODES:
+        assert node not in p, f"{node} in a DV scan plan:\n{p}"
+
+
+def test_dv_scan_plans_run_no_python(
+    spark, delta_dv, delta_partitioned, monkeypatch
+):
+    """Every DV read decodes its bitmaps on the driver: the flat scan,
+    the per-partition-group scan and MERGE's live scan all keep the
+    (file, ordinal) anti-join and contain no Python evaluation node."""
+    import pyspark.sql.functions as F
+
+    d, w, _rel = delta_dv
+    _assert_dv_plan_is_jvm_only(scan_delta_table(spark, d))
+
+    dp, wp = delta_partitioned
+    for prel in list(read_delta_log(dp)["files"])[:2]:
+        wp.delete_rows(prel, [0])
+    part_scan = scan_delta_table(spark, dp)
+    _assert_dv_plan_is_jvm_only(part_scan)
+    assert part_scan.count() == 25 - 2
+
+    live_scans = []
+    flat_live_scan = DeltaTableWriter._flat_live_scan
+
+    def recording(self, state, schema):
+        out = flat_live_scan(self, state, schema)
+        live_scans.append(out)
+        return out
+
+    monkeypatch.setattr(DeltaTableWriter, "_flat_live_scan", recording)
+    src = _nation(spark).filter("n_nationkey IN (2, 3)").withColumn(
+        "n_name", F.lit("UP")
+    )
+    w.merge_upsert(src, ["n_nationkey"])
+    assert live_scans
+    _assert_dv_plan_is_jvm_only(live_scans[0])
+    got = {r["n_nationkey"]: r["n_name"] for r in scan_delta_table(spark, d).collect()}
+    assert got[2] == "UP" and got[3] == "UP" and 0 not in got and 1 not in got
+
+
 def test_dv_delete_requires_live_file(spark, delta_dv):
     d, w, _rel = delta_dv
     with pytest.raises(ValueError, match="not a live file"):

@@ -112,6 +112,119 @@ def test_bitmap_array_magic_pinned():
         r.deserialize_bitmap_array(b"\x00" * 12)
 
 
+def _naive_bitmap_array(blob: bytes) -> list[int]:
+    """Straight-line reading of the two specs, one value at a time: the
+    RoaringBitmapArray wrapper, then each portable 32-bit bitmap."""
+    magic, n_maps = struct.unpack_from("<Iq", blob, 0)
+    assert magic == 1681511377
+    pos, out = 12, []
+    for m in range(n_maps):
+        (cookie,) = struct.unpack_from("<H", blob, pos)
+        if cookie == 12347:
+            n = struct.unpack_from("<H", blob, pos + 2)[0] + 1
+            pos += 4
+            flags = blob[pos : pos + (n + 7) // 8]
+            pos += (n + 7) // 8
+            runs = [bool(flags[i // 8] & (1 << (i % 8))) for i in range(n)]
+            offset_header = n >= 4
+        else:
+            n = struct.unpack_from("<I", blob, pos + 4)[0]
+            pos += 8
+            runs, offset_header = [False] * n, True
+        desc = [struct.unpack_from("<HH", blob, pos + 4 * i) for i in range(n)]
+        pos += 4 * n + (4 * n if offset_header else 0)
+        for is_run, (key, card_minus1) in zip(runs, desc):
+            base = (m << 32) | (key << 16)
+            if is_run:
+                (n_runs,) = struct.unpack_from("<H", blob, pos)
+                pos += 2
+                for _ in range(n_runs):
+                    first, length_minus1 = struct.unpack_from("<HH", blob, pos)
+                    pos += 4
+                    for v in range(first, first + length_minus1 + 1):
+                        out.append(base | v)
+            elif card_minus1 + 1 <= 4096:
+                for _ in range(card_minus1 + 1):
+                    out.append(base | struct.unpack_from("<H", blob, pos)[0])
+                    pos += 2
+            else:
+                for bit in range(1 << 16):
+                    if blob[pos + bit // 8] & (1 << (bit % 8)):
+                        out.append(base | bit)
+                pos += 8192
+    return out
+
+
+def _portable_with_runs(containers) -> bytes:
+    """Hand-build a cookie-12347 bitmap from (key, kind, sorted lows)
+    with kind in {"run", "array", "bitmap"}; four or more containers
+    carry the offset header."""
+    n = len(containers)
+    flags = bytearray((n + 7) // 8)
+    bodies = []
+    for i, (_key, kind, lows) in enumerate(containers):
+        if kind == "run":
+            flags[i // 8] |= 1 << (i % 8)
+            runs = []
+            for v in lows:
+                if runs and runs[-1][0] + runs[-1][1] + 1 == v:
+                    runs[-1][1] += 1
+                else:
+                    runs.append([v, 0])
+            bodies.append(
+                struct.pack("<H", len(runs))
+                + b"".join(struct.pack("<HH", s, ln) for s, ln in runs)
+            )
+        elif kind == "array":
+            bodies.append(struct.pack(f"<{len(lows)}H", *lows))
+        else:
+            words = [0] * 1024
+            for v in lows:
+                words[v >> 6] |= 1 << (v & 63)
+            bodies.append(struct.pack("<1024Q", *words))
+    head = struct.pack("<HH", 12347, n - 1) + bytes(flags)
+    head += b"".join(struct.pack("<HH", k, len(lows) - 1) for k, _, lows in containers)
+    if n >= 4:
+        pos = len(head) + 4 * n
+        offsets = []
+        for b in bodies:
+            offsets.append(pos)
+            pos += len(b)
+        head += struct.pack(f"<{n}I", *offsets)
+    return head + b"".join(bodies)
+
+
+def test_vectorized_decode_matches_naive_decoder():
+    """The numpy decoder against a one-value-at-a-time reading of the
+    spec: bucket 0 mixes run, array and bitmap containers (with the
+    offset header), bucket 1 holds positions >= 2^32."""
+    import random
+
+    rng = random.Random(7)
+    run_lows = list(range(10, 300)) + [400] + list(range(60000, 65536))
+    array_lows = sorted(rng.sample(range(1 << 16), 700))
+    bitmap_lows = sorted(rng.sample(range(1 << 16), 9000))
+    bucket0 = [
+        (0, "run", run_lows),
+        (1, "array", array_lows),
+        (3, "bitmap", bitmap_lows),
+        (9, "run", [0, 1, 2, 65535]),
+    ]
+    high = [5, 70000, (1 << 32) - 1]
+    blob = (
+        struct.pack("<Iq", 1681511377, 2)
+        + _portable_with_runs(bucket0)
+        + r.serialize_roaring32(high)
+    )
+    expected = [
+        (key << 16) | v for key, _kind, lows in bucket0 for v in lows
+    ] + [(1 << 32) | v for v in high]
+    assert _naive_bitmap_array(blob) == expected
+    assert r.deserialize_bitmap_array(blob) == expected
+    arr = r.bitmap_array_positions(blob)
+    assert arr.dtype == "int64" and arr.tolist() == expected
+
+
 # --- DV file framing ---------------------------------------------------------
 
 
