@@ -62,6 +62,7 @@ from .manifest import (
     new_manifest,
     struct_mapping_of,
 )
+from .parquet_io import stage_slices
 from ..operators.util import gated_broadcast, local_df
 
 NS_METADATA = "ns_metadata.json"   # namespace marker (LakeFSCatalog.java:50)
@@ -513,6 +514,76 @@ def _compile_assignments(
                 )
             out[col] = c
     return out
+
+
+def bag_equal(a: DataFrame, b: DataFrame) -> bool:
+    """Multiset row equality of ``a`` and ``b`` (``b`` projected to
+    ``a``'s columns) as ONE executor-side tagged bag aggregate: a row
+    group's +1/−1 tag sum is 0 iff both sides carry it with the same
+    multiplicity — the verdict of a two-sided exceptAll at one hash
+    exchange instead of two anti-join actions, with nothing collected to
+    the driver (NULLs/NaNs group exactly as the set ops treat them)."""
+    cols = a.columns
+    s = "_s"
+    while s in cols:
+        s += "_"
+    tagged = a.withColumn(s, F.lit(1)).unionByName(
+        b.select(*cols).withColumn(s, F.lit(-1))
+    )
+    return (
+        tagged.groupBy(*cols)
+        .agg(F.sum(s).alias(s))
+        .filter(F.col(s) != 0)
+        .isEmpty()
+    )
+
+
+def _rebase_refused(
+    base: TableManifest, fresh: TableManifest | None, wrote_data: bool
+) -> bool:
+    """Whether a commit that lost its race against ``fresh`` must surface
+    the conflict instead of rebasing: the table was dropped or recreated,
+    or its schema changed (the work validated against ``base`` may no
+    longer conform), or — when ``wrote_data``, i.e. data files were
+    already written against the base's layout — its partition or bucket
+    spec changed."""
+    return (
+        fresh is None
+        or fresh.table_uuid != base.table_uuid
+        or fresh.schema_json != base.schema_json
+        or (
+            wrote_data
+            and (
+                fresh.partition_spec != base.partition_spec
+                or fresh.bucket_spec != base.bucket_spec
+            )
+        )
+    )
+
+
+def _commit_rebasing(
+    ops: TableOperations, base: TableManifest, build, wrote_data: bool
+) -> None:
+    """Publish ``build(base)`` over ``base`` with the bounded optimistic
+    rebase every rebasing writer shares: a lost race re-reads the head
+    and publishes ``build(fresh)`` on top of it, up to 10 rounds, raising
+    the conflict when ``_rebase_refused`` (or the rounds run out).
+    ``build`` returns the next manifest for a base, or None to commit
+    nothing; it may raise to abort. The expensive work (data files,
+    delete files) ran once before — only this metadata commit loops."""
+    for _ in range(10):
+        nxt = build(base)
+        if nxt is None:
+            return
+        try:
+            ops.commit(base, nxt)
+            return
+        except (CommitConflictError, CommitStateError) as e:
+            fresh = ops.current()
+            if _rebase_refused(base, fresh, wrote_data):
+                raise
+            base, err = fresh, e
+    raise err
 
 
 class VersionedCatalog:
@@ -1327,30 +1398,16 @@ class VersionedCatalog:
             levels, aligned, partition_by=base.partition_spec or None,
             bucket_spec=base.bucket_spec or None
         )
-        for _ in range(10):
-            try:
-                ops.commit(
-                    base,
-                    base.next(
-                        base.files + files,
-                        file_stats={**base.file_stats, **stats},
-                        file_partitions=fparts,
-                    ),
-                )
-                return
-            except (CommitConflictError, CommitStateError) as e:
-                fresh = ops.current()
-                if (
-                    fresh is None
-                    or fresh.table_uuid != base.table_uuid
-                    or fresh.schema_json != base.schema_json
-                    or fresh.partition_spec != base.partition_spec
-                    or fresh.bucket_spec != base.bucket_spec
-                ):
-                    raise
-                base = fresh
-                err = e
-        raise err
+        _commit_rebasing(
+            ops,
+            base,
+            lambda b: b.next(
+                b.files + files,
+                file_stats={**b.file_stats, **stats},
+                file_partitions=fparts,
+            ),
+            wrote_data=True,
+        )
 
     def append_many(
         self, identifier: str | list[str], dfs: list[DataFrame]
@@ -1361,13 +1418,11 @@ class VersionedCatalog:
         (same files-per-version, per-file stats and row order; file names
         are uuid-stamped either way), at 1 Spark job instead of N.
 
-        How one job reproduces the sequential twin's file layout: each
-        frame keeps its OWN partitioning (union is narrow — no coalesce),
-        frames union with a slice index, and ``partitionBy(_slice)``
-        makes every task write exactly one file for its own slice — so
-        slice i yields one file per non-empty input partition of frame i,
-        the same count the per-frame write yields after ``_write_data``'s
-        zero-row skip. Partitioned/bucketed tables and single-frame calls
+        The one job is ``parquet_io.stage_slices``, and each frame keeps
+        its OWN partitioning (no ``one_task``), so every task writes one
+        file for its own slice — slice i yields one file per non-empty
+        input partition of frame i, the same count the per-frame write
+        yields after ``_write_data``'s zero-row skip. Partitioned/bucketed tables and single-frame calls
         take the per-frame ``append`` path (their writer shuffles each
         frame into its own layout, which a shared staging job cannot
         reproduce)."""
@@ -1388,66 +1443,31 @@ class VersionedCatalog:
         table_dir = os.path.join(self.root, *levels)
         data_dir = os.path.join(table_dir, "data")
         os.makedirs(data_dir, exist_ok=True)
-        staging = os.path.join(table_dir, f".staging-{_uuid.uuid4().hex}")
-        u = None
-        for i, d in enumerate(aligned):
-            s = d.withColumn("_slice", F.lit(i))
-            u = s if u is None else u.unionByName(s)
-        try:
-            u.write.mode("overwrite").partitionBy("_slice").parquet(staging)
-            for i in range(len(aligned)):
-                sdir = os.path.join(staging, f"_slice={i}")
+        with stage_slices(aligned, dir=table_dir) as staged:
+            for slice_files in staged:
                 out: list[str] = []
                 stats: dict = {}
                 stamp = _uuid.uuid4().hex[:12]
-                j = 0
-                if os.path.isdir(sdir):
-                    for name in sorted(os.listdir(sdir)):
-                        if not name.endswith(".parquet"):
-                            continue
-                        src = os.path.join(sdir, name)
-                        if _parquet_num_rows(src) == 0:
-                            continue
-                        dst = os.path.join(
-                            data_dir, f"{stamp}-{j:05d}.parquet"
-                        )
-                        os.replace(src, dst)
-                        rel = self._rel(repo, dst)
-                        out.append(rel)
-                        fs = _footer_stats(dst)
-                        if fs:
-                            stats[rel] = fs
-                        j += 1
+                for src, _ in slice_files:
+                    if _parquet_num_rows(src) == 0:
+                        continue
+                    dst = os.path.join(data_dir, f"{stamp}-{len(out):05d}.parquet")
+                    os.replace(src, dst)
+                    rel = self._rel(repo, dst)
+                    out.append(rel)
+                    fs = _footer_stats(dst)
+                    if fs:
+                        stats[rel] = fs
                 # metadata-only commit per slice, with append's rebase-retry
-                err: Exception | None = None
-                for _ in range(10):
-                    try:
-                        ops.commit(
-                            base,
-                            base.next(
-                                base.files + out,
-                                file_stats={**base.file_stats, **stats},
-                            ),
-                        )
-                        err = None
-                        break
-                    except (CommitConflictError, CommitStateError) as e:
-                        fresh = ops.current()
-                        if (
-                            fresh is None
-                            or fresh.table_uuid != base.table_uuid
-                            or fresh.schema_json != base.schema_json
-                            or fresh.partition_spec != base.partition_spec
-                            or fresh.bucket_spec != base.bucket_spec
-                        ):
-                            raise
-                        base = fresh
-                        err = e
-                if err is not None:
-                    raise err
+                _commit_rebasing(
+                    ops,
+                    base,
+                    lambda b: b.next(
+                        b.files + out, file_stats={**b.file_stats, **stats}
+                    ),
+                    wrote_data=True,
+                )
                 base = ops.current()
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
 
     def add_files(self, identifier: str | list[str], source_dir: str) -> int:
         """Bulk file import (Iceberg's ``add_files`` procedure): register
@@ -1676,13 +1696,7 @@ class VersionedCatalog:
                     return True
                 except (CommitConflictError, CommitStateError):
                     fresh = ops.current()
-                    if (
-                        fresh is None
-                        or fresh.table_uuid != base.table_uuid
-                        or fresh.schema_json != base.schema_json
-                        or fresh.partition_spec != base.partition_spec
-                        or fresh.bucket_spec != base.bucket_spec
-                    ):
+                    if _rebase_refused(base, fresh, wrote_data=True):
                         raise
                     if batch_id <= int(
                         fresh.properties.get("stream.last_batch_id", -1)
@@ -1799,22 +1813,15 @@ class VersionedCatalog:
             # the predicate onto the fresh base's files and retry (same
             # schema guard as append's fast-append retry — a concurrent
             # schema change could alter the predicate's meaning)
-            for _ in range(10):
-                dp = self._scope_mor_predicate(base, predicate)
-                try:
-                    ops.commit(base, base.next(base.files, delete_preds=dp))
-                    return
-                except (CommitConflictError, CommitStateError) as e:
-                    fresh = ops.current()
-                    if (
-                        fresh is None
-                        or fresh.table_uuid != base.table_uuid
-                        or fresh.schema_json != base.schema_json
-                    ):
-                        raise
-                    base = fresh
-                    err = e
-            raise err
+            _commit_rebasing(
+                ops,
+                base,
+                lambda b: b.next(
+                    b.files, delete_preds=self._scope_mor_predicate(b, predicate)
+                ),
+                wrote_data=False,
+            )
+            return
         if eff in ("position", "position-deletes"):
             # Iceberg v2 POSITION deletes: materialize the matching rows'
             # (data file, row ordinal) pairs into a small parquet delete
@@ -1863,9 +1870,10 @@ class VersionedCatalog:
             if not new_rel:
                 return  # predicate matched nothing — no commit needed
             covered = sorted(cov_obs.get["covered"])
-            for _ in range(10):
-                pos_map = {f: list(v) for f, v in base.position_deletes.items()}
-                stale = [f for f in covered if f not in base.files]
+
+            def build(b: TableManifest) -> TableManifest:
+                pos_map = {f: list(v) for f, v in b.position_deletes.items()}
+                stale = [f for f in covered if f not in b.files]
                 if stale:
                     # a concurrent rewrite replaced a covered file; our
                     # ordinals no longer address its rows — abort rather
@@ -1874,24 +1882,11 @@ class VersionedCatalog:
                         f"position delete lost its base files: {stale[:3]}"
                     )
                 for f in covered:
-                    pos_map.setdefault(f, [])
-                    pos_map[f] = pos_map[f] + new_rel
-                try:
-                    ops.commit(
-                        base, base.next(base.files, position_deletes=pos_map)
-                    )
-                    return
-                except (CommitConflictError, CommitStateError) as e:
-                    fresh = ops.current()
-                    if (
-                        fresh is None
-                        or fresh.table_uuid != base.table_uuid
-                        or fresh.schema_json != base.schema_json
-                    ):
-                        raise
-                    base = fresh
-                    err = e
-            raise err
+                    pos_map[f] = pos_map.get(f, []) + new_rel
+                return b.next(b.files, position_deletes=pos_map)
+
+            _commit_rebasing(ops, base, build, wrote_data=False)
+            return
         if eff != "copy-on-write":
             raise UnsupportedOperationError(f"unknown delete mode {eff!r}")
         survivors = self._read_files(levels[0], base).filter(
@@ -2024,35 +2019,19 @@ class VersionedCatalog:
         del_rel, key_range = self._write_eq_delete_file(levels, keys, key_cols)
         if del_rel is None:
             return  # empty key set — nothing to delete, no commit
-        err = None
-        for _ in range(10):
-            eq_map, covered = self._eq_delete_map(
-                base, del_rel, key_cols, key_range
-            )
+
+        # value-based deletes re-scope cleanly onto a fresh base on a lost
+        # race: files that survived keep their stamp-eligibility, files
+        # rewritten concurrently get stamped fresh (the values still name
+        # the same rows), appended files get stamped too — which matches
+        # the predicate-delete rebase semantics this engine already uses
+        def build(b: TableManifest) -> TableManifest | None:
+            eq_map, covered = self._eq_delete_map(b, del_rel, key_cols, key_range)
             if not covered:
-                return  # every file provably key-free — no commit needed
-            try:
-                ops.commit(
-                    base, base.next(base.files, equality_deletes=eq_map)
-                )
-                return
-            except (CommitConflictError, CommitStateError) as e:
-                fresh = ops.current()
-                if (
-                    fresh is None
-                    or fresh.table_uuid != base.table_uuid
-                    or fresh.schema_json != base.schema_json
-                ):
-                    raise
-                # value-based deletes re-scope cleanly onto the fresh base:
-                # files that survived keep their stamp-eligibility, files
-                # rewritten concurrently get stamped fresh (the values
-                # still name the same rows), appended files get stamped
-                # too — which matches the predicate-delete rebase
-                # semantics this engine already uses
-                base = fresh
-                err = e
-        raise err
+                return None  # every file provably key-free — no commit needed
+            return b.next(b.files, equality_deletes=eq_map)
+
+        _commit_rebasing(ops, base, build, wrote_data=False)
 
     def update_where(
         self,
@@ -2105,32 +2084,18 @@ class VersionedCatalog:
             # updated-row files are already written; a lost race re-scopes
             # the delete predicate onto the fresh base and retries, refusing
             # if the schema or layout changed underneath
-            for _ in range(10):
-                dp = self._scope_mor_predicate(base, predicate)
-                try:
-                    ops.commit(
-                        base,
-                        base.next(
-                            base.files + files,
-                            file_stats={**base.file_stats, **stats},
-                            delete_preds=dp,
-                            file_partitions=fparts,
-                        ),
-                    )
-                    return
-                except (CommitConflictError, CommitStateError) as e:
-                    fresh = ops.current()
-                    if (
-                        fresh is None
-                        or fresh.table_uuid != base.table_uuid
-                        or fresh.schema_json != base.schema_json
-                        or fresh.partition_spec != base.partition_spec
-                        or fresh.bucket_spec != base.bucket_spec
-                    ):
-                        raise
-                    base = fresh
-                    err = e
-            raise err
+            _commit_rebasing(
+                ops,
+                base,
+                lambda b: b.next(
+                    b.files + files,
+                    file_stats={**b.file_stats, **stats},
+                    delete_preds=self._scope_mor_predicate(b, predicate),
+                    file_partitions=fparts,
+                ),
+                wrote_data=True,
+            )
+            return
         if eff != "copy-on-write":
             raise UnsupportedOperationError(f"unknown update mode {eff!r}")
         cols = []
@@ -4217,16 +4182,4 @@ class VersionedCatalog:
         a, b = self.scan(id_a), self.scan(id_b)
         if [f.simpleString() for f in a.schema.fields] != [f.simpleString() for f in b.schema.fields]:
             return False
-        cols = a.columns
-        s = "_s"
-        while s in cols:
-            s += "_"
-        tagged = a.withColumn(s, F.lit(1)).unionByName(
-            b.select(*cols).withColumn(s, F.lit(-1))
-        )
-        return (
-            tagged.groupBy(*cols)
-            .agg(F.sum(s).alias(s))
-            .filter(F.col(s) != 0)
-            .isEmpty()
-        )
+        return bag_equal(a, b)

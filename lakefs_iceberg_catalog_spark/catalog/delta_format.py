@@ -476,6 +476,8 @@ class DeltaTableWriter:
             if c_items or pcols:
                 from pyspark.sql import Observation
 
+                from .parquet_io import singleton_metrics
+
                 metrics = []
                 for i, (_, cexpr) in enumerate(c_items):
                     metrics.append(
@@ -485,13 +487,7 @@ class DeltaTableWriter:
                             ).otherwise(0)
                         ).alias(f"viol_{i}")
                     )
-                metrics.append(F.count(F.lit(1)).alias("n"))
-                for i, c in enumerate(pcols):
-                    metrics += [
-                        F.min(F.col(c)).alias(f"mn_{i}"),
-                        F.max(F.col(c)).alias(f"mx_{i}"),
-                        F.count(F.col(c)).alias(f"ct_{i}"),
-                    ]
+                metrics += singleton_metrics([F.col(c) for c in pcols])
                 obs = Observation()
                 df = df.observe(obs, *metrics)
             pvals: dict[str, str | None] = {}
@@ -706,15 +702,13 @@ class DeltaTableWriter:
         16): its protocol+metaData derive from the frame's DRIVER-SIDE
         schema (``_schema_df``), so no separate write job is needed.
 
-        Same staging trick as IcebergTableWriter.append_many: each slice
-        coalesces to one partition, the union carries a slice index, and
-        ``partitionBy`` on the index (plus the table's partition columns,
-        whose log-encoded values are then read off the directory names)
-        makes each task write exactly its slice's file. The fast path is
-        GUARDED: identity/generated columns, CHECK constraints, column
-        mapping, and non-int partition columns all fall back to the
-        per-version ``commit`` path with identical semantics (those
-        features need the per-add driver passes)."""
+        The one job is ``parquet_io.stage_slices`` over ``one_task``
+        slices, partitioned by the table's partition columns too, whose
+        log-encoded values are read off the staged directory names. The
+        fast path is GUARDED: identity/generated columns, CHECK
+        constraints, column mapping, and non-int partition columns all
+        fall back to the per-version ``commit`` path with identical
+        semantics (those features need the per-add driver passes)."""
         # a fresh table's commits here carry no partitioning: commit_many
         # takes no partition_cols, and commit 0 is what would set them
         pcols: list[str] = []
@@ -737,88 +731,34 @@ class DeltaTableWriter:
                 self.commit(add_dfs=[d], operation=operation)
                 for d in adds_per_version
             ]
-        import tempfile
-
         import pyarrow.parquet as pq
 
-        from .parquet_io import write_single_parquet  # noqa: F401 (fallback)
+        from .parquet_io import one_task, stage_slices
 
-        start = 0
         fresh = self._version < 0
         versions: list[int] = []
-        stage = tempfile.mkdtemp(prefix="commit-many-")
-        try:
-            u = None
-            for i, d in enumerate(adds_per_version[start:]):
-                # coalesce only multi-partition slices — an all-coalesced
-                # union collapses to ONE task (see append_many); raw
-                # 1-partition slices keep their own parallel task
-                s = d if d.rdd.getNumPartitions() == 1 else d.coalesce(1)
-                s = s.withColumn("_slice", F.lit(i))
-                u = s if u is None else u.unionByName(s)
-            u.write.partitionBy("_slice", *pcols).mode("overwrite").parquet(
-                stage
-            )
-            staged: list[tuple[str, int, dict]] = []
-            for i, d in enumerate(adds_per_version[start:]):
-                sdir = os.path.join(stage, f"_slice={i}")
-                pvals: dict[str, str | None] = {}
-                ok = os.path.isdir(sdir)
-                if ok:
-                    cur = sdir
-                    for c in pcols:
-                        subs = [
-                            e for e in sorted(os.listdir(cur))
-                            if e.startswith(f"{c}=")
-                        ]
-                        if len(subs) != 1:  # multi-valued slice
-                            ok = False
-                            break
-                        val = subs[0].split("=", 1)[1]
-                        pvals[c] = (
-                            None
-                            if val == "__HIVE_DEFAULT_PARTITION__"
-                            else val
-                        )
-                        cur = os.path.join(cur, subs[0])
-                    if ok:
-                        parts = [
-                            f for f in sorted(os.listdir(cur))
-                            if f.endswith(".parquet")
-                        ]
-                        ok = len(parts) == 1
-                if not ok:
-                    staged.append(None)  # empty or multi-valued: plain path
-                    continue
-                path = os.path.join(cur, parts[0])
-                staged.append(
-                    (path, int(pq.read_metadata(path).num_rows), pvals)
-                )
-            for i, (d, st) in enumerate(zip(adds_per_version[start:], staged)):
+        with stage_slices(
+            [one_task(d) for d in adds_per_version], pcols
+        ) as staged:
+            for i, (d, files) in enumerate(zip(adds_per_version, staged)):
                 # fresh-table commit 0 stamps protocol+metaData from the
                 # frame's DRIVER-SIDE schema (_schema_df) — it stages like
                 # every other slice instead of paying its own write job
                 first = fresh and i == 0
-                if st is None:
-                    versions.append(
-                        self.commit(
-                            add_dfs=[d],
-                            partition_cols=(pcols or None) if first else None,
-                            operation=operation,
-                        )
+                if len(files) != 1:  # empty or multi-valued: plain path
+                    versions.append(self.commit(add_dfs=[d], operation=operation))
+                    continue
+                path, pvals = files[0]
+                versions.append(
+                    self.commit(
+                        _staged_adds=[
+                            (path, int(pq.read_metadata(path).num_rows), pvals)
+                        ],
+                        operation=operation,
+                        _schema_df=d if first else None,
                     )
-                else:
-                    versions.append(
-                        self.commit(
-                            _staged_adds=[st],
-                            partition_cols=(pcols or None) if first else None,
-                            operation=operation,
-                            _schema_df=d if first else None,
-                        )
-                    )
-            return versions
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+                )
+        return versions
 
     def set_table_property(self, key: str, value: str) -> int:
         """ALTER TABLE ... SET TBLPROPERTIES: one metadata-only commit

@@ -1064,13 +1064,8 @@ class IcebergTableWriter:
         ``append`` calls (same per-snapshot data files, manifests and
         metadata versions), at 1 Spark job instead of N.
 
-        How the one job yields one file per slice: each slice occupies
-        exactly one partition of the union (already-1-partition slices
-        stay raw — their tasks run in parallel; wider slices coalesce to
-        one partition, and an ALL-coalesced union is collapsed by the
-        optimizer into a single task, so the coalesce is applied only
-        where needed); ``partitionBy`` on the slice index then makes each
-        task write exactly its slice's file.
+        The one job is ``parquet_io.stage_slices`` over ``one_task``
+        slices, so each slice stages exactly one file.
         Partition single-valuedness is checked from each staged file's
         FOOTER (min == max, no nulls — zero data IO); transforms other
         than identity over int/long/string, non-parquet formats, and
@@ -1106,40 +1101,19 @@ class IcebergTableWriter:
         )
         if fmt != "parquet" or len(dfs) < 2 or not use_footer_pvals:
             return [self.append(d, file_format=file_format) for d in dfs]
-        import tempfile
-
         import pyarrow.parquet as pq
 
-        from .parquet_io import parquet_column_bounds
+        from .parquet_io import one_task, parquet_column_bounds, stage_slices
 
+        snaps: list[int] = []
         # staged OUTSIDE the table dir so directory-walking readers
         # (orphan sweep, all_files) never see in-flight slice files
-        stage = tempfile.mkdtemp(prefix="append-many-")
-        try:
-            u = None
-            for i, d in enumerate(dfs):
-                # coalesce only multi-partition slices: when EVERY union
-                # child is a coalesce(1), Catalyst collapses the whole
-                # union to ONE task (measured — the staged write then
-                # serializes every slice's scan+encode); an already-1-
-                # partition slice kept raw stays its own parallel task,
-                # with scan row order intact either way
-                s = d if d.rdd.getNumPartitions() == 1 else d.coalesce(1)
-                s = s.withColumn("_slice", F.lit(i))
-                u = s if u is None else u.unionByName(s)
-            u.write.partitionBy("_slice").mode("overwrite").parquet(stage)
-            snaps: list[int] = []
-            for i, d in enumerate(dfs):
-                sdir = os.path.join(stage, f"_slice={i}")
-                parts = (
-                    [f for f in sorted(os.listdir(sdir)) if f.endswith(".parquet")]
-                    if os.path.isdir(sdir)
-                    else []
-                )
-                if len(parts) != 1:  # empty slice wrote no file: plain path
+        with stage_slices([one_task(d) for d in dfs]) as staged:
+            for d, files in zip(dfs, staged):
+                if len(files) != 1:  # empty slice wrote no file: plain path
                     snaps.append(self.append(d, file_format=file_format))
                     continue
-                path = os.path.join(sdir, parts[0])
+                path = files[0][0]
                 md = pq.read_metadata(path)
                 n_rows = int(md.num_rows)
                 pvals: dict | None = {}
@@ -1222,9 +1196,7 @@ class IcebergTableWriter:
                         _staged=(path, n_rows, pvals),
                     )
                 )
-            return snaps
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+        return snaps
 
     def _head_snapshot_id(self) -> int:
         """The current head snapshot id — what a no-op DML returns (no new

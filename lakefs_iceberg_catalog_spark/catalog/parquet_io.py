@@ -13,6 +13,7 @@ FOOTER (metadata-only read), not a data pass.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 import shutil
@@ -35,19 +36,14 @@ def distinct_singleton_row(df: DataFrame) -> tuple:
     return tuple(rows[0])
 
 
-def singleton_observation(df: DataFrame, exprs: list):
-    """Attach an Observation computing the single-distinct-row check of
-    ``distinct_singleton_row`` as metrics that ride the NEXT action on
-    ``df`` (the data-file write) instead of paying their own Spark job:
-    per partition expression, min/max/non-null-count — a column is
-    single-valued iff it is all-null or all-one-non-null-value, and a row
-    of single-valued columns is the single distinct row. Returns
-    ``(df_with_observe, observation)``; decode with
-    ``singleton_from_metrics`` after the action ran."""
-    from pyspark.sql import Observation
+def singleton_metrics(exprs: list) -> list:
+    """The single-distinct-row check of ``distinct_singleton_row`` as
+    aggregate metrics: the row count ``n`` and, per partition expression,
+    min/max/non-null-count — a column is single-valued iff it is all-null
+    or all-one-non-null-value, and a row of single-valued columns is the
+    single distinct row. Decode with ``singleton_from_metrics``."""
     from pyspark.sql import functions as F
 
-    obs = Observation()
     metrics = [F.count(F.lit(1)).alias("n")]
     for i, e in enumerate(exprs):
         metrics += [
@@ -55,13 +51,27 @@ def singleton_observation(df: DataFrame, exprs: list):
             F.max(e).alias(f"mx_{i}"),
             F.count(e).alias(f"ct_{i}"),
         ]
-    return df.observe(obs, *metrics), obs
+    return metrics
+
+
+def singleton_observation(df: DataFrame, exprs: list):
+    """Attach ``singleton_metrics`` as an Observation that rides the NEXT
+    action on ``df`` (the data-file write) instead of paying its own Spark
+    job. Returns ``(df_with_observe, observation)``; decode with
+    ``singleton_from_metrics`` after the action ran."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    return df.observe(obs, *singleton_metrics(exprs)), obs
 
 
 def singleton_from_metrics(m: dict, n_cols: int) -> tuple:
-    """Decode ``singleton_observation`` metrics into the single distinct
+    """Decode ``singleton_metrics`` into the single distinct
     partition-value row, raising exactly like ``distinct_singleton_row``
-    when the frame was empty or multi-valued."""
+    when the frame was empty or multi-valued. Spark orders NaN above every
+    other double and groups all NaNs as one value, so an all-NaN column
+    is single-valued (min and max both NaN) while NaN beside any number
+    is not (min is the number)."""
     n = m["n"]
     if n == 0:
         raise ValueError(
@@ -72,7 +82,7 @@ def singleton_from_metrics(m: dict, n_cols: int) -> tuple:
         ct, mn, mx = m[f"ct_{i}"], m[f"mn_{i}"], m[f"mx_{i}"]
         if ct == 0:
             vals.append(None)  # all-null column: the one distinct value
-        elif ct == n and mn == mx:
+        elif ct == n and (mn == mx or (mn != mn and mx != mx)):
             vals.append(mn)
         else:  # mixed nulls/values or min!=max: several distinct rows
             raise ValueError(
@@ -211,6 +221,78 @@ def write_single_avro(df: DataFrame, dest_path: str) -> int:
     return count_container_rows(dest_path)
 
 
+def _hive_files(root: str, depth: int) -> list[tuple[str, dict[str, str | None]]]:
+    """Every parquet file ``depth`` hive directory levels under ``root``,
+    in path order, with the partition values its directory names encode:
+    Spark's ``escapePathName`` is exactly percent-encoding, and NULL is
+    the hive default-partition marker."""
+    from urllib.parse import unquote
+
+    out = []
+    for path in sorted(
+        glob.glob(os.path.join(glob.escape(root), *["*=*"] * depth, "*.parquet"))
+    ):
+        pvals: dict[str, str | None] = {}
+        for seg in os.path.relpath(path, root).split(os.sep)[:-1]:
+            k, _, v = seg.partition("=")
+            v = unquote(v)
+            pvals[unquote(k)] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
+        out.append((path, pvals))
+    return out
+
+
+def one_task(df: DataFrame) -> DataFrame:
+    """``df`` as one partition, for a ``stage_slices`` caller that wants
+    one file per slice. Only multi-partition frames coalesce: when EVERY
+    union child is a coalesce(1), Catalyst collapses the whole union to
+    ONE task (measured — the staged write then serializes every slice's
+    scan and encode), while an already-1-partition frame kept raw stays
+    its own parallel task, with scan row order intact either way."""
+    return df if df.rdd.getNumPartitions() == 1 else df.coalesce(1)
+
+
+@contextlib.contextmanager
+def stage_slices(
+    frames: list[DataFrame],
+    partition_cols: tuple | list = (),
+    dir: str | None = None,
+):
+    """Stage N frames' data files with ONE distributed write job: the
+    frames union with a ``_slice`` index, and partitioning the write by
+    that index (then ``partition_cols``) makes every task write only its
+    own slice's files.
+
+    Yields, per frame in order, the ``[(file path, {partition col: hive
+    value or None})]`` written for it (empty for an empty frame); the
+    stage dir (a fresh temp dir, under ``dir`` when given) is removed on
+    exit, so callers move the files they keep.
+
+    This is the shared core of the N-frames → one-job → N-metadata-commits
+    writers (``IcebergTableWriter.append_many``,
+    ``DeltaTableWriter.commit_many``, ``VersionedCatalog.append_many``,
+    ``streaming.core.spool_frames``). Each frame keeps the partitioning it
+    arrives with — a caller that needs one file per slice passes
+    ``one_task(frame)`` — and each caller keeps its own fallback for an
+    empty or multi-file slice."""
+    from pyspark.sql import functions as F
+
+    stage = tempfile.mkdtemp(prefix=".staging-", dir=dir)
+    try:
+        u = None
+        for i, d in enumerate(frames):
+            s = d.withColumn("_slice", F.lit(i))
+            u = s if u is None else u.unionByName(s)
+        u.write.partitionBy("_slice", *partition_cols).mode("overwrite").parquet(
+            stage
+        )
+        yield [
+            _hive_files(os.path.join(stage, f"_slice={i}"), len(partition_cols))
+            for i in range(len(frames))
+        ]
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
 def write_hive_partitioned(
     df: DataFrame,
     pcols: list[str],
@@ -239,7 +321,6 @@ def write_hive_partitioned(
     skew case; `spark.sql.files.maxRecordsPerFile` splits it without
     changing this code."""
     import uuid as _uuid
-    from urllib.parse import unquote
 
     import pyarrow.parquet as pq
 
@@ -258,19 +339,7 @@ def write_hive_partitioned(
             *pcols
         ).mode("overwrite").parquet(out_dir)
         out: list[tuple[str, dict[str, str | None], int]] = []
-        for part in sorted(
-            glob.glob(
-                os.path.join(out_dir, *["*=*"] * len(pcols), "part-*.parquet")
-            )
-        ):
-            relsegs = os.path.relpath(part, out_dir).split(os.sep)[:-1]
-            pvals: dict[str, str | None] = {}
-            for seg in relsegs:
-                k, _, v = seg.partition("=")
-                v = unquote(v)
-                pvals[unquote(k)] = (
-                    None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                )
+        for part, pvals in _hive_files(out_dir, len(pcols)):
             name = f"{prefix}-{_uuid.uuid4()}.snappy.parquet"
             shutil.move(part, os.path.join(dest_dir, name))
             n = int(

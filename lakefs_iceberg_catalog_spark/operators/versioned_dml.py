@@ -10,34 +10,10 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog.catalog import bag_equal
 from ..registry import register
 from .versioned import WORKERS_SCHEMA, _WORKERS_VALUES, _materialize, _seeded
 from .util import bounded_rows, local_df, materialize_bounded
-
-
-def _same_rows(a: DataFrame, b: DataFrame) -> bool:
-    """Multiset row equality as ONE executor-side tagged bag aggregate —
-    the invariance assertions ('compact keeps the visible rows') without
-    collecting either side to the driver (VERDICT r10 #8). A row group's
-    +1/−1 tag sum is 0 iff both sides carry it with the same
-    multiplicity — the same verdict as the previous two-sided exceptAll
-    at ONE hash exchange instead of two anti-join passes per side
-    (§1.2/§2.4; NULLs/NaNs group exactly as the set ops treat them)."""
-    from pyspark.sql import functions as F
-
-    cols = a.columns
-    s = "_s"
-    while s in cols:
-        s += "_"
-    tagged = a.withColumn(s, F.lit(1)).unionByName(
-        b.select(*cols).withColumn(s, F.lit(-1))
-    )
-    return (
-        tagged.groupBy(*cols)
-        .agg(F.sum(s).alias(s))
-        .filter(F.col(s) != 0)
-        .isEmpty()
-    )
 
 
 @register(
@@ -113,7 +89,7 @@ def dml_delete_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat.compact(t)
     assert not ops.current().equality_deletes  # folded by the rewrite
     after = cat.scan(t)
-    assert _same_rows(before, after)  # compaction kept the visible rows
+    assert bag_equal(before, after)  # compaction kept the visible rows
     out = after.select(
         "o_orderkey", "o_custkey", dround("o_totalprice", 2).alias("total")
     )
@@ -221,7 +197,7 @@ def dml_update_where_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre_compact = cat.scan(t)
     cat.compact(t)
     assert not ops.current().delete_preds
-    assert _same_rows(pre_compact, cat.scan(t))
+    assert bag_equal(pre_compact, cat.scan(t))
     return _materialize(spark, cat.scan(t), root)
 
 
@@ -990,7 +966,7 @@ def dml_delete_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     visible = cat.scan(t)
     cat.compact(t)
     assert not ops.current().position_deletes  # (d) folded away
-    assert _same_rows(visible, cat.scan(t))
+    assert bag_equal(visible, cat.scan(t))
 
     out = cat.scan(t).select(
         "o_orderkey", "o_orderstatus", dround("o_totalprice", 2).alias("total")

@@ -58,150 +58,6 @@ def register(name: str, oracle: str | None = None):
 # front of the sweep window ahead of the computed staleness order below.
 _SWEEP_OVERRIDE: list[str] = []
 
-# Historical hand-rotated order, kept as the FALLBACK when no
-# CORRECTNESS_r*.json artifacts are visible (e.g. the package imported
-# outside the build tree). Inside the repo the order is COMPUTED from the
-# artifacts by _staleness_order() — the hand-edited list shipped round 10's
-# one red gate by missing a rotation (VERDICT r11 #8), so it no longer
-# drives the sweep when artifacts exist.
-_SWEEP_FALLBACK = [
-    # ---- Round-11 window (slots 0-49; the driver checks the FIRST 50).
-    # Never-driver-checked keys outrank everything (VERDICT r10 #1) ...
-    "source_delta_column_mapping_id_partitioned",
-    # ... new round-11 keys insert HERE as they land (each insertion
-    # displaces the last in-window key below the 'Past the window'
-    # marker, keeping slot 50 exact) ...
-    "source_iceberg_transform_mor", "source_iceberg_global_eq_deletes",
-    "source_iceberg_evolved_spec_mor", "source_iceberg_changelog",
-    "dml_delta_merge_column_mapping_id", "dedup_semdedup_prune",
-    "stream_cdc_iceberg", "maint_iceberg_rewrite_deletes",
-    "source_iceberg_delete_files_table", "source_delta_history",
-    "source_delta_detail",
-    # ... then the ENTIRE r5-stale block (VERDICT r10 #6: rotate the
-    # round-11 sweep to the r5-stale tail; oldest rows first) ...
-    "dedup_shared_spans_cross", "dml_insert_overwrite", "dml_purge_history",
-    "dml_scd2_intervals", "flagship_top_unshipped", "join_asof_nearest",
-    "join_asof_tolerance", "join_range_bucketized",
-    "maint_sort_order_compact", "meta_partitions", "meta_snapshots",
-    "multimodal_audio_resample", "pipeline_batch_padding",
-    "pipeline_contamination_check", "pipeline_doc_shard",
-    "pipeline_interleave_mixture", "pipeline_pack_sequences",
-    "rollup_gapfill_locf", "rollup_hypertable_incremental",
-    "rollup_ohlc_bars", "sample_tokens_systematic", "scalar_regex",
-    "scalar_try_safe", "similarity_maxsim_late_interaction",
-    "sink_bucketed_pruning", "source_merge_schema_read", "stream_cdc_apply",
-    "stream_static_join", "text_tfidf_top_terms",
-    "time_travel_as_of_timestamp", "window_activity_streaks",
-    "window_anomaly_zscore", "window_ewma", "window_first_touch_attribution",
-    "window_pareto_abc", "window_rolling_corr", "window_sessionize",
-    "window_twap",
-    # ---- Past the window (slot 50+): remaining keys by STALENESS ----
-    # r5-swept remainder, then the r6 tail (first in line after the
-    # round-11 window drains; VERDICT r11 #5 pins this key at the head
-    # of the round-12 window — the computed staleness order does that
-    # automatically, it is the lone r5-stale key)
-    "window_user_gap_stats",
-    "agg_cube", "agg_distinct", "agg_gini_concentration",
-    "agg_grouping_sets", "agg_hash_group", "agg_quantile",
-    "agg_salted_twophase", "agg_stats", "agg_string_collect", "branch_revert",
-    "dedup_scrub_repeated_chunks",
-    "dml_delete_equality", "dml_update_struct_member", "filter_predicate",
-    "join_asof", "join_cross", "join_full_outer", "join_inner_equi",
-    "join_left_outer", "join_right_outer", "join_semi", "join_theta_range",
-    "limit_offset", "limit_topk", "meta_commit_log", "meta_refs",
-    "pivot_wide", "project_select", "q1_pricing_summary", "scalar_array_map",
-    "scalar_bitwise", "scalar_conditional", "scalar_datetime", "scalar_hash",
-    "scalar_json", "scalar_math", "scalar_null_safe", "scalar_string",
-    "scan_table", "set_except_all", "set_intersect", "set_intersect_all",
-    "set_union", "sort_order_by", "source_binary_files",
-    "source_iceberg_metadata", "text_bigram_logprob_score", "text_zipf_fit",
-    "window_cusum_drift", "window_holt_trend",
-    # r7-swept (the round-7 window, verified 50/50 green)
-    "agg_count_min_sketch", "agg_hyperloglog_native",
-    "dedup_cluster_representative", "join_bloom_prefilter",
-    "join_dynamic_partition_pruning", "join_interval_overlap",
-    "maint_delta_optimize", "maint_delta_vacuum", "maint_delta_zorder",
-    "maint_iceberg_expire_snapshots", "maint_iceberg_sort_rewrite",
-    "pipeline_epoch_resample", "pipeline_mixture_temperature",
-    "pipeline_train_val_split", "similarity_knn_graph", "sink_delta_export",
-    "sink_iceberg_export", "sink_sharded_manifests",
-    "source_delta_add_column", "source_delta_cdf", "source_delta_checkpoint",
-    "source_delta_column_mapping", "source_delta_deletion_vectors",
-    "source_delta_generated_partition", "source_delta_log",
-    "source_delta_partitioned", "source_delta_stats_skipping",
-    "source_iceberg_equality_deletes", "source_iceberg_files_table",
-    "source_iceberg_incremental", "source_iceberg_orc",
-    "source_iceberg_partitioned", "source_iceberg_position_deletes",
-    "source_iceberg_refs", "source_iceberg_schema_evolution",
-    "source_iceberg_snapshots_table", "source_iceberg_spec_evolution",
-    "source_iceberg_stats_pruning", "source_iceberg_transform_partitioned",
-    "stream_source_delta", "stream_source_iceberg", "subquery_correlated",
-    "subquery_in", "subquery_scalar", "udaf_pandas", "udf_python",
-    "window_analytic", "window_distribution", "window_rank",
-    "window_seasonal_decompose",
-    # r8-swept (the round-8 window, verified 50/50 green)
-    "agg_rollup", "branch_diff_equal", "branch_merge", "branch_wap_publish",
-    "ddl_create_table", "ddl_schema_crud", "ddl_schema_evolution",
-    "dedup_cc_canonical", "dedup_embedding_cosine", "dedup_exact",
-    "dedup_near_minhash", "dedup_ngram_jaccard", "dedup_simhash",
-    "dedup_simhash_pairs", "dml_delete_where", "dml_delete_where_mor",
-    "dml_delta_merge_column_mapping", "dml_delta_merge_cow",
-    "dml_delta_merge_partitioned", "dml_iceberg_delete_cow",
-    "dml_iceberg_delete_orc_mor", "dml_iceberg_merge_cow",
-    "dml_insert_values", "dml_merge_upsert", "dml_update_where",
-    "dml_update_where_mor", "join_anti", "join_salted_skew",
-    "maint_delta_restore", "maint_iceberg_rollback", "multimodal_decode",
-    "set_except", "sink_iceberg_add_files", "sink_partitioned_parquet",
-    "source_csv_roundtrip", "source_delta_cdc_files",
-    "source_delta_cdf_partitioned", "source_json_roundtrip",
-    "source_orc_roundtrip", "stream_dedup", "stream_session_window",
-    "stream_sink_delta", "stream_sliding_window",
-    "stream_stream_interval_join", "stream_tumbling_window",
-    "text_fingerprint", "text_lang_id", "text_quality_filter", "text_stats",
-    "text_token_count",
-    # r9-swept (freshest — the round-9 window, verified 50/50 green)
-    "agg_funnel_steps", "branch_cherry_pick", "branch_tag_scan",
-    "ddl_add_files", "ddl_partition_evolution", "ddl_rollback_version",
-    "ddl_type_widening", "dedup_containment", "dedup_repeated_spans",
-    "dml_delete_positions", "dml_delta_delete_dv", "dml_delta_merge_dv",
-    "dml_delta_update_dv", "dml_iceberg_delete_mor", "dml_iceberg_merge_mor",
-    "dml_merge_schema_evolution", "join_fuzzy_levenshtein",
-    "maint_delta_reorg_purge", "multimodal_frame_sample", "multimodal_resize",
-    "pipeline_corpus_mixture", "pipeline_training_corpus",
-    "q10_returned_items", "q14_promo_share", "q18_large_volume",
-    "q5_local_supplier", "q6_forecast_revenue", "sample_stratified_hash",
-    "similarity_ann_ivf", "similarity_ann_lsh",
-    "similarity_ann_lsh_multiprobe", "similarity_pairs_blocked",
-    "similarity_topk", "sink_append", "sink_clustered_pruning",
-    "sink_create_table_as", "sink_iceberg_add_files_transform",
-    "source_delta_column_mapping_id", "source_iceberg_partitioned_mor",
-    "source_rows", "sql_merge_into", "sql_use_namespace",
-    "stream_sink_iceberg", "stream_sink_versioned", "stream_stateful",
-    "stream_watermark_late_data", "text_pii_scrub", "time_travel_scan",
-    "unpivot_stack", "window_range_frame",
-    # r10-swept (freshest — the round-10 window, verified 50/50 green)
-    "dml_iceberg_merge_mor_partitioned",
-    "maint_compact_expire_gc", "meta_files", "multimodal_clip_filter",
-    "multimodal_feature_extract", "multimodal_phash_dedup",
-    "pipeline_global_shuffle", "q11_important_stock", "q12_priority_lines",
-    "q13_customer_distribution", "q15_top_supplier",
-    "q16_parts_supplier_count", "q17_small_quantity", "q19_disjunctive_parts",
-    "q20_potential_promotion", "q21_suppliers_who_kept_waiting",
-    "q22_dormant_customers", "q2_min_cost_supplier", "q3_shipping_priority",
-    "q4_order_priority", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "similarity_ann_pq", "similarity_ann_sq8",
-    "similarity_range_search", "sink_partition_spec",
-    "sink_partition_transforms", "sink_shallow_clone", "sink_zorder_pruning",
-    "sql_call_procedures", "sql_merge_full_sync", "stream_source_versioned",
-    "stream_stream_outer_join", "text_bpe_merge_rounds",
-    "text_repetition_signals", "text_unigram_logprob_score",
-    "time_travel_changes", "window_retention_cohorts",
-    "agg_approx_distinct", "agg_entropy", "agg_heavy_hitters",
-    "agg_histogram", "agg_mode_deterministic", "agg_quantile_approx",
-    "branch_diff_rows", "ddl_analyze_stats", "ddl_schema_evolution_nested",
-    "dedup_cross_source", "dedup_novelty_score",
-]
-
 
 def correctness_ages(repo_root: str | None = None) -> dict[str, int]:
     """``key -> newest round whose CORRECTNESS_r*.json holds a row for it``
@@ -249,11 +105,9 @@ def _apply_sweep_priority() -> None:
     staleness makes the rotation self-serving — no hand-edited list to
     forget (the round-10 red gate's root cause, VERDICT r11 #8)."""
     ages = correctness_ages()
-    if ages:
-        ordered = _staleness_order(list(QUERIES), ages)
-    else:
-        ordered = [k for k in _SWEEP_FALLBACK if k in QUERIES]
-        ordered += [k for k in QUERIES if k not in set(ordered)]
+    # no artifact visible (package imported outside its repo): keep
+    # registration order
+    ordered = _staleness_order(list(QUERIES), ages) if ages else list(QUERIES)
     for d in (QUERIES, ORACLES):
         snapshot = {k: d[k] for k in ordered if k in d}
         d.clear()
@@ -263,11 +117,5 @@ def _apply_sweep_priority() -> None:
 def load_all() -> None:
     """Import every operator module (idempotent) so the registry is full."""
     for mod in _OPERATOR_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # Modules land incrementally across build rounds; missing ones are
-            # simply not yet implemented.
-            if e.name and not e.name.startswith("lakefs_iceberg_catalog_spark"):
-                raise
+        importlib.import_module(mod)
     _apply_sweep_priority()

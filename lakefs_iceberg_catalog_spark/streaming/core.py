@@ -94,10 +94,9 @@ def run_events_stream(
 
 def spool_frames(frames: list[DataFrame], spool: str, names: list[str]) -> None:
     """Write each frame as exactly one parquet file ``spool/<name>`` with
-    ONE distributed staging job for all of them (the epoch-replay fixtures
-    previously paid one coalesce(1) write JOB per epoch): slices coalesce
-    to one partition each, union with a slice index, ``partitionBy`` on
-    the index → each task writes its slice's single file, in parallel.
+    ONE distributed staging job for all of them (``parquet_io.stage_slices``
+    over ``one_task`` frames) instead of one coalesce(1) write JOB per
+    epoch.
 
     File mtimes are then stamped STRICTLY INCREASING in list order —
     the file stream source orders same-batch files by modification time,
@@ -105,39 +104,18 @@ def spool_frames(frames: list[DataFrame], spool: str, names: list[str]) -> None:
     same timestamp (epoch order must never depend on a tie-break).
     An empty frame (partitionBy writes no file for it) falls back to a
     single-file write so the spool always carries every epoch."""
-    import os
-    import tempfile
     import time as _time
 
-    from ..catalog.parquet_io import write_single_parquet
+    from ..catalog.parquet_io import one_task, stage_slices, write_single_parquet
 
-    stage = tempfile.mkdtemp(prefix="spool-stage-")
-    try:
-        u = None
-        for i, d in enumerate(frames):
-            # coalesce only multi-partition frames — an all-coalesced union
-            # collapses to ONE task (see append_many); raw 1-partition
-            # frames keep their own parallel task
-            s = d if d.rdd.getNumPartitions() == 1 else d.coalesce(1)
-            s = s.withColumn("_slice", F.lit(i))
-            u = s if u is None else u.unionByName(s)
-        u.write.partitionBy("_slice").mode("overwrite").parquet(stage)
+    with stage_slices([one_task(d) for d in frames]) as staged:
         base = _time.time()
-        for i, name in enumerate(names):
-            sdir = os.path.join(stage, f"_slice={i}")
-            parts = (
-                [f for f in sorted(os.listdir(sdir)) if f.endswith(".parquet")]
-                if os.path.isdir(sdir)
-                else []
-            )
+        for i, (d, name, files) in enumerate(zip(frames, names, staged)):
             dest = os.path.join(spool, name)
-            if len(parts) == 1:
+            if len(files) == 1:
                 # shutil.move, not os.replace: survives stage and spool
-                # landing on different filesystems (EXDEV), like the
-                # sibling staged-write paths
-                shutil.move(os.path.join(sdir, parts[0]), dest)
+                # landing on different filesystems (EXDEV)
+                shutil.move(files[0][0], dest)
             else:  # empty epoch
-                write_single_parquet(frames[i], dest)
+                write_single_parquet(d, dest)
             os.utime(dest, (base + i, base + i))
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)

@@ -2110,3 +2110,115 @@ def test_append_many_matches_sequential_appends(spark, tmp_path):
         map(tuple, c.scan(tq).collect())
     )
     assert opm.current().file_partitions  # partition metadata intact
+
+
+def _rebasing_op(name, cat, spark, t, key):
+    """Run one rebasing write op on worker ``key`` of the workers table;
+    returns the (id, age) rows it should leave visible on the seeded
+    table, before any concurrent row."""
+    base_rows = {(str(r[0]), r[3]) for r in WORKERS_ROWS}
+    row = next(r for r in base_rows if r[0] == key)
+    if name == "position_delete":
+        cat.delete_where(t, f"id = '{key}'", mode="position")
+        return base_rows - {row}
+    if name == "equality_delete":
+        cat.delete_keys(t, spark.createDataFrame([(key,)], "id string"))
+        return base_rows - {row}
+    if name == "update_mor":
+        cat.update_where(
+            t, f"id = '{key}'", {"age": "age + 100"}, mode="merge-on-read"
+        )
+        return (base_rows - {row}) | {(key, row[1] + 100)}
+    assert name == "append_many"
+    cat.append_many(
+        t,
+        [
+            _workers_df(spark, [("2" + key, "A", "B", 50, "M")]),
+            _workers_df(spark, [("3" + key, "C", "D", 51, "F")]),
+        ],
+    )
+    return base_rows | {("2" + key, 50), ("3" + key, 51)}
+
+
+@pytest.mark.parametrize(
+    "op", ["position_delete", "equality_delete", "update_mor", "append_many"]
+)
+def test_rebasing_writers_land_or_refuse(cat, spark, monkeypatch, op):
+    """Every rebasing writer shares append's lost-race contract: a
+    concurrent commit landing between the writer's base read and its
+    publish is rebased over (both commits land), while a concurrent
+    schema change makes the rebase refuse with the original conflict."""
+    t = "repo.main.company.workers"
+    ops = cat._ops(t)[0]
+    real_commit = ops.__class__.commit
+    state = {"armed": False, "concurrent": None}
+
+    def racing(self, base, manifest):
+        # the op's first publish: land the concurrent commit underneath it
+        if state["armed"]:
+            state["armed"] = False
+            state["concurrent"]()
+        return real_commit(self, base, manifest)
+
+    monkeypatch.setattr(ops.__class__, "commit", racing)
+
+    state["concurrent"] = lambda: cat.insert_values(t, [("8", "C", "D", 21, "F")])
+    state["armed"] = True
+    expected = _rebasing_op(op, cat, spark, t, "1")
+    assert state["concurrent"] is not None and not state["armed"]
+    got = {(r["id"], r["age"]) for r in cat.scan(t).collect()}
+    assert got == expected | {("8", 21)}  # both commits landed
+
+    state["concurrent"] = lambda: cat.add_column(t, "sneak", "string")
+    state["armed"] = True
+    before = ops.current().version
+    with pytest.raises((CommitConflictError, CommitStateError)):
+        _rebasing_op(op, cat, spark, t, "2")
+    assert ops.current().version == before + 1  # only the schema change
+
+
+@pytest.mark.parametrize("writer", ["iceberg", "delta", "catalog", "spool"])
+def test_staged_writers_job_count_flat(spark, tmp_path, writer):
+    """The four staged writers stage every slice with ONE write job and
+    then commit metadata only, so 4 slices must not use more Spark jobs
+    than 2 (``<=``, not ``==``: asynchronously submitted broadcast/probe
+    jobs can vary the attribution of a constant-count job by one)."""
+    from pyspark.sql import functions as F
+
+    from lakefs_iceberg_catalog_spark.catalog.delta_format import DeltaTableWriter
+    from lakefs_iceberg_catalog_spark.catalog.iceberg_format import (
+        IcebergTableWriter,
+    )
+    from lakefs_iceberg_catalog_spark.streaming.core import spool_frames
+
+    df = spark.range(40).selectExpr("id", "cast(id % 4 as int) AS k")
+
+    def jobs(n_slices: int) -> int:
+        frames = [df.filter(F.col("id") % n_slices == i) for i in range(n_slices)]
+        d = str(tmp_path / f"{writer}_{n_slices}")
+        if writer == "iceberg":
+            run = lambda: IcebergTableWriter(spark, d).append_many(frames)  # noqa: E731
+        elif writer == "delta":
+            run = lambda: DeltaTableWriter(spark, d).commit_many(frames)  # noqa: E731
+        elif writer == "catalog":
+            c = VersionedCatalog(spark, d)
+            c.create_repository("repo", "main")
+            c.create_namespace("repo.main.db")
+            c.create_table("repo.main.db.t", df.schema)
+            run = lambda: c.append_many("repo.main.db.t", frames)  # noqa: E731
+        else:
+            os.makedirs(d)
+            run = lambda: spool_frames(  # noqa: E731
+                frames, d, [f"epoch-{i}.parquet" for i in range(n_slices)]
+            )
+        sc = spark.sparkContext
+        group = f"staged-{writer}-{n_slices}"
+        sc.setJobGroup(group, "pin")
+        try:
+            run()
+        finally:
+            sc.setJobGroup("idle", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    two, four = jobs(2), jobs(4)
+    assert 1 <= four <= two, f"job count grew with slices: {two} -> {four}"

@@ -2433,3 +2433,39 @@ def test_write_riding_probes_match_pre_write_semantics(spark, tmp_path):
     assert files_before == sorted(
         p for p in os.listdir(d5) if p.endswith(".parquet")
     )
+
+
+def test_nan_partition_value_commits_and_reads_back(spark, tmp_path):
+    """A double partition column that is NaN in every row is ONE
+    partition tuple (Spark groups all NaNs as one value), so the add
+    commits like any other single-valued slice and scans back as NaN; a
+    slice mixing NaN with a number is still two tuples and is refused."""
+    from pyspark.sql import functions as F
+
+    n = _nation(spark).where("n_nationkey < 4")
+    d = str(tmp_path / "nan")
+    w = DeltaTableWriter(spark, d)
+    w.commit(
+        add_dfs=[n.withColumn("x", F.lit(float("nan")))], partition_cols=["x"]
+    )
+    (add,) = read_delta_log(d)["files"].values()
+    assert add["partitionValues"]["x"].lower() == "nan"
+    back = scan_delta_table(spark, d)
+    assert back.count() == 4
+    assert back.where(F.isnan("x")).count() == 4
+
+    # the same frame with a real value still commits
+    w.commit(add_dfs=[n.withColumn("x", F.lit(2.5))])
+    assert scan_delta_table(spark, d).where("x = 2.5").count() == 4
+
+    # NaN beside a number: several tuples, refused, no orphan file
+    files_before = sorted(p for p in os.listdir(d) if p.endswith(".parquet"))
+    mixed = n.withColumn(
+        "x",
+        F.when(F.col("n_nationkey") < 2, F.lit(float("nan"))).otherwise(2.5),
+    )
+    with pytest.raises(ValueError, match="got several"):
+        w.commit(add_dfs=[mixed])
+    assert files_before == sorted(
+        p for p in os.listdir(d) if p.endswith(".parquet")
+    )
